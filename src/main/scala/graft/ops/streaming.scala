@@ -20,6 +20,27 @@ import Params._
   */
 object Streaming {
 
+  /** A fresh working directory for one streaming key's input, output and
+    * checkpoint, named `<prefix>_<random tag>`. Also registers
+    * [[graft.streaming.NioLocalFs]] for `s`, so the checkpoint's offset
+    * and commit logs and state stores write without spawning a process
+    * per file operation; idempotent, so keys stay order-independent. */
+  private[graft] def streamRoot(s: SparkSession, prefix: String): String = {
+    s.conf.set(graft.streaming.NioLocalFs.ConfKey,
+      classOf[graft.streaming.NioLocalFs].getName)
+    GraftTmp.dir(s"${prefix}_" +
+      java.util.UUID.randomUUID.toString.replace("-", "").take(12))
+  }
+
+  /** Runs `body` with `spark.sql.shuffle.partitions` = `n` on `s`, then
+    * restores it. A stateful query's store count is fixed at its first
+    * start, so this sizes the checkpoint's state stores. */
+  private def withShufflePartitions[A](s: SparkSession, n: Int)(body: => A): A = {
+    val prev = s.conf.get("spark.sql.shuffle.partitions")
+    s.conf.set("spark.sql.shuffle.partitions", n.toString)
+    try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
+  }
+
   /** True Structured-Streaming pipeline end-to-end INSIDE the scored
     * surface (the twins in graft.streaming cover semantics; this one
     * covers the sink): file source → watermarked tumbling aggregation →
@@ -33,8 +54,7 @@ object Streaming {
     * atomically per epoch. */
   private def streamFileSink(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
-    val tag = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
-    val root = GraftTmp.dir(s"stream_$tag")
+    val root = streamRoot(s, "stream")
     // the fixture table is a single parquet file; the file source wants a
     // directory
     val src = java.nio.file.Paths.get(s"$root/in")
@@ -48,9 +68,7 @@ object Streaming {
     // of the session's 32 cuts per-batch store/commit overhead (conf
     // restored after the stream finishes — at real scale size this to
     // state volume, it is fixed for the checkpoint's lifetime)
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
+    withShufflePartitions(s, 8) {
       val q = s.readStream.schema(sch).parquet(src.toString)
       .withColumn("ts_us", timestamp_micros(T.usCol(sch("ts").dataType)))
       .withWatermark("ts_us", "1 hour")
@@ -63,7 +81,7 @@ object Streaming {
       .outputMode("append").trigger(Trigger.AvailableNow())
       .start()
       q.awaitTermination()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+    }
     s.read.parquet(s"$root/out").orderBy("win_start", "event_type")
   }
 
@@ -80,8 +98,7 @@ object Streaming {
     * against the keyed target, scaling with keys, not event volume. */
   private def streamForeachBatchUpsert(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
-    val tag = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
-    val root = GraftTmp.dir(s"upsert_$tag")
+    val root = streamRoot(s, "upsert")
     val src = java.nio.file.Paths.get(s"$root/in")
     java.nio.file.Files.createDirectories(src)
     for (f <- Seq("e1.parquet", "e2.parquet"))
@@ -100,9 +117,7 @@ object Streaming {
     // per-batch volumes are small (keys-per-batch rows); 8 shuffle
     // partitions instead of the session's 32 cuts per-batch task
     // overhead — same sizing note as streamFileSink
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
+    withShufflePartitions(s, 8) {
       val q = s.readStream.schema(sch).option("maxFilesPerTrigger", "1")
         .parquet(src.toString)
         .select(col("user_id"), col("event_id").as("last_event"),
@@ -125,7 +140,7 @@ object Streaming {
         }
         .start()
       q.awaitTermination()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+    }
     s.read.parquet(tgt).orderBy("user_id")
   }
 
@@ -178,8 +193,7 @@ object Streaming {
         org.apache.spark.sql.Dataset[graft.streaming.Streams.PSession]): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
     import s.implicits._
-    val tag = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
-    val root = GraftTmp.dir(s"${tagPrefix}_$tag")
+    val root = streamRoot(s, tagPrefix)
     val src = java.nio.file.Paths.get(s"$root/in")
     java.nio.file.Files.createDirectories(src)
     java.nio.file.Files.copy(
@@ -189,9 +203,7 @@ object Streaming {
     // per-user state is 4 longs; 8 state stores instead of the session's
     // 32 cuts per-batch store/commit overhead (same sizing note as
     // streamFileSink; conf restored after)
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
+    withShufflePartitions(s, 8) {
       val in = s.readStream.schema(sch).parquet(src.toString)
         .select(col("user_id"), col("event_id"), col("event_type"),
           (Det.money(col("value")) * 100).cast("long").as("cents"),
@@ -205,7 +217,7 @@ object Streaming {
         .outputMode("append").trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+    }
     s.read.parquet(s"$root/out")
       .select(col("user_id"), col("start_us"), col("end_us"), col("n_events"),
         (col("sum_cents").cast("decimal(30,0)") / 100).cast("double").as("sum_value"),
@@ -334,13 +346,6 @@ object Streaming {
     * batch interval join — that batch query is the oracle. */
   private def streamStreamJoin(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
-    val tag = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
-    val root = GraftTmp.dir(s"ssjoin_$tag")
-    val src = java.nio.file.Paths.get(s"$root/in")
-    java.nio.file.Files.createDirectories(src)
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$dir/events.parquet"),
-      src.resolve("events.parquet"))
     // join state is keyed on user_id: 8 state stores instead of the
     // session's 32 — same sizing note as streamFileSink. The override
     // lives on a FORKED session (shared SparkContext, isolated SQLConf):
@@ -348,6 +353,12 @@ object Streaming {
     // race if two builders ever run concurrently (round-6 verdict #4).
     val ss = s.newSession()
     ss.conf.set("spark.sql.shuffle.partitions", "8")
+    val root = streamRoot(ss, "ssjoin") // the query runs on ss
+    val src = java.nio.file.Paths.get(s"$root/in")
+    java.nio.file.Files.createDirectories(src)
+    java.nio.file.Files.copy(
+      java.nio.file.Paths.get(s"$dir/events.parquet"),
+      src.resolve("events.parquet"))
     // An INNER stream-stream join emits every row on arrival; the
     // trailing no-data micro-batch exists only to advance the watermark
     // for append-mode emission and state EVICTION — it commits zero
@@ -391,8 +402,7 @@ object Streaming {
     * the deterministic tick ledger from range(n). */
   private def streamCustomSource(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
-    val tag = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
-    val root = GraftTmp.dir(s"stream_src_$tag")
+    val root = streamRoot(s, "stream_src")
     val q = s.readStream.format("graft.sources.LedgerStreamSource")
       .option("rows", "10000").option("batchSize", "2500")
       .option("partitions", "4")
@@ -419,8 +429,7 @@ object Streaming {
     * connector; oracle re-derives the ledger from range(n). */
   private def streamCustomSink(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
-    val tag = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
-    val root = GraftTmp.dir(s"stream_sink_$tag")
+    val root = streamRoot(s, "stream_sink")
     val q = s.readStream.format("graft.sources.LedgerStreamSource")
       .option("rows", "10000").option("batchSize", "2500")
       .option("partitions", "4")
@@ -463,8 +472,7 @@ object Streaming {
     s.sql("""INSERT INTO graftcat.lake.orders_feed
             |SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice
             |FROM graft_feed_src WHERE o_orderkey % 3 <> 0""".stripMargin)
-    val tag = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
-    val root = GraftTmp.dir(s"stream_tbl_$tag")
+    val root = streamRoot(s, "stream_tbl")
     val q = s.readStream.table("graftcat.lake.orders_feed")
       .writeStream.format("parquet")
       .option("path", s"$root/out").option("checkpointLocation", s"$root/cp")
@@ -524,8 +532,7 @@ object Streaming {
     s.sql("""UPDATE graftcat.lake.cust_cdfs
             |SET c_acctbal = c_acctbal + 500.0
             |WHERE c_nationkey = 3""".stripMargin)
-    val tag = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
-    val root = GraftTmp.dir(s"stream_cdf_$tag")
+    val root = streamRoot(s, "stream_cdf")
     val q = s.readStream.table("graftcat.lake.cust_cdfs.changes")
       .writeStream.format("parquet")
       .option("path", s"$root/out").option("checkpointLocation", s"$root/cp")
@@ -574,8 +581,7 @@ object Streaming {
     s.sql("""CREATE TABLE graftcat.lake.cust_repl_dst
             |(c_custkey BIGINT, c_nationkey INT, c_acctbal DOUBLE)""".stripMargin)
     s.sql("CALL graftcat.system.set_delete_mode('lake.cust_repl_dst', 'merge-on-read-equality')")
-    val tag = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
-    val root = GraftTmp.dir(s"stream_repl_$tag")
+    val root = streamRoot(s, "stream_repl")
     def drain(): Unit = {
       val q = s.readStream.table("graftcat.lake.cust_repl_src.changes")
         .writeStream
@@ -583,7 +589,7 @@ object Streaming {
         .trigger(Trigger.AvailableNow())
         .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
           val bs = b.sparkSession // the micro-batch session owns the view
-          val view = s"graft_repl_batch_$tag"
+          val view = s"graft_repl_batch_${root.takeRight(12)}"
           // settle the batch ONCE: apply_cdc takes three passes over its
           // source (key collect, upsert write, validation) and each
           // would otherwise re-run the whole CDF scan + window
@@ -664,8 +670,7 @@ object Streaming {
                |FROM graft_tsink_src WHERE o_orderkey % 5 = $i""".stripMargin)
     s.sql("""CREATE TABLE graftcat.lake.orders_tsink_dst
             |(o_orderkey BIGINT, o_orderpriority STRING, price2 DOUBLE)""".stripMargin)
-    val tag = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
-    val root = GraftTmp.dir(s"stream_tsink_$tag")
+    val root = streamRoot(s, "stream_tsink")
     def drain(): Unit = {
       val q = s.readStream.table("graftcat.lake.orders_tsink")
         .where(col("o_totalprice") > 150000.0)
@@ -727,8 +732,7 @@ object Streaming {
     s.sql("""CREATE TABLE graftcat.lake.orders_swap
             |(o_orderkey BIGINT, o_orderpriority STRING, price2 DOUBLE)""".stripMargin)
     s.sql("CALL graftcat.system.create_branch('lake.orders_swap', 'staging')")
-    val tag = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
-    val root = GraftTmp.dir(s"stream_swap_$tag")
+    val root = streamRoot(s, "stream_swap")
     def summary(): (Long, Double) = {
       val r = s.sql("""SELECT CAST(COUNT(*) AS BIGINT),
                       |CAST(COALESCE(SUM(CAST(price2 AS DECIMAL(18,2))), 0.0)
@@ -835,8 +839,7 @@ object Streaming {
         ()
       }
     }
-    val tag = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
-    val root = GraftTmp.dir(s"stream_smv_$tag")
+    val root = streamRoot(s, "stream_smv")
     def drain(): Unit =
       s.readStream.table("graftcat.lake.orders_smv.changes")
         .writeStream.option("checkpointLocation", s"$root/cp")
@@ -882,8 +885,7 @@ object Streaming {
       s.sql(s"""INSERT INTO graftcat.lake.cust_rate
                |SELECT c_custkey, c_nationkey, c_acctbal FROM graft_rate_src
                |WHERE c_custkey % 5 = $i""".stripMargin)
-    val tag = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
-    val root = GraftTmp.dir(s"stream_rate_$tag")
+    val root = streamRoot(s, "stream_rate")
     val q = s.readStream
       .option("maxFilesPerTrigger", "2")
       .table("graftcat.lake.cust_rate")

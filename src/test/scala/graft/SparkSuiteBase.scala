@@ -24,6 +24,21 @@ trait SparkSuiteBase extends AnyFunSuite
   val SF = "/root/testdata/sf0.001"
   def run(name: String) = SparkEntry.queries(name)(spark, SF)
 
+  /** Registers `name` once per `file:` checkpoint filesystem: as is, on
+    * Hadoop's default LocalFs, and with " (NioLocalFs)" appended, on the
+    * filesystem every stream key registers through `Streaming.streamRoot`.
+    * `body` gets the maker of its root directories; the session's
+    * registration is restored afterwards. */
+  def checkpointFsTest(name: String)(body: (String => String) => Unit): Unit =
+    for ((suffix, nio) <- Seq("" -> false, " (NioLocalFs)" -> true)) test(name + suffix) {
+      val key = graft.streaming.NioLocalFs.ConfKey
+      val prev = spark.conf.getOption(key)
+      spark.conf.unset(key)
+      try body(tag =>
+        if (nio) graft.ops.Streaming.streamRoot(spark, tag) else graft.ops.GraftTmp.dir(tag))
+      finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
+
   /** Same per-key hygiene as Bench/Verify: builders that persist
     * (pagerank caches, dedup checkpoint lineage, the prod-dedup cell
     * assignment) must not ride the shared session's storage into later

@@ -27,7 +27,7 @@ class StreamMvCrashSuite extends SparkSuiteBase {
   private def ident(t: String) =
     org.apache.spark.sql.connector.catalog.Identifier.of(Array("db"), t)
 
-  test("crash between the MERGE commit and the checkpoint advance: replay is a no-op") {
+  checkpointFsTest("crash between the MERGE commit and the checkpoint advance: replay is a no-op") { mkRoot =>
     wh
     spark.sql("DROP TABLE IF EXISTS cmvcat.db.base")
     spark.sql("DROP TABLE IF EXISTS cmvcat.db.mv")
@@ -72,8 +72,7 @@ class StreamMvCrashSuite extends SparkSuiteBase {
           "injected crash after MERGE commit, before checkpoint advance")
       }
     }
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_smvcrash_cp").toString
+    val root = mkRoot("graft_smvcrash_cp")
     def drain(): Unit =
       spark.readStream.table("cmvcat.db.base.changes")
         .writeStream.option("checkpointLocation", s"$root/cp")

@@ -4,9 +4,9 @@ import org.apache.spark.sql.SparkSession
 
 /** Dev tool: print the physical plan for one or more query keys
   * (the `.explain` snapshots PLANS.md / plans/r19 carry). Not part of
-  * the shipped library surface.
+  * the shipped library surface, so it lives in test scope.
   *
-  * Usage: runMain graft.tools.PlanDump <sfDir> <key>[,<key>...] [<outDir> <suffix>]
+  * Usage: Test/runMain graft.tools.PlanDump <sfDir> <key>[,<key>...] [<outDir> <suffix>]
   *
   * With <outDir>/<suffix>, writes `explain("formatted")` output to
   * <outDir>/<key>_<suffix>.txt per key (the optimization-round evidence

@@ -140,17 +140,28 @@ object Api {
     // set as the array_distinct(transform(…slice+concat_ws)) spelling,
     // but one codegen'd loop instead of interpreted HOFs (~6× faster —
     // shingle generation dominated every shingle-dedup query)
-    val sh = T.fan(docs, idCol)
+    //
+    // One exploded relation e(doc_id, sz, sh) joined with itself: the two
+    // sides are one subtree, so AQE reuses its shingle exchange and each
+    // document is shingled once. No inferred filter re-runs the
+    // shingling: explode_outer infers no size(…) > 0 and a non-nullable
+    // sz no isnotnull(size(…)); documents with >= k tokens have >= 1
+    // shingle, so the rows are explode's. The shuffled-hash hint keeps
+    // the join off a broadcast of every shingle and skips two sorts
+    // (build-side memory at ×100: SCALING.md §Joins).
+    val e = T.fan(docs, idCol)
       .select(col(idCol).as("doc_id"), toks.as("toks"))
       .where(size(col("toks")) >= k)
       .select(col("doc_id"),
         graft.plans.expressions.shinglesK(col("toks"), k).as("shingles"))
-      .withColumn("sz", size(col("shingles")))
-    val e1 = sh.select(col("doc_id").as("d1"), col("sz").as("sz1"), explode(col("shingles")).as("sh"))
-    val e2 = sh.select(col("doc_id").as("d2"), col("sz").as("sz2"), explode(col("shingles")).as("sh2"))
-    e1.join(e2, col("sh") === col("sh2") && col("d1") < col("d2") &&
-        col("sz1") * den >= col("sz2") * num && col("sz2") * den >= col("sz1") * num)
-      .groupBy("d1", "d2", "sz1", "sz2")
+      .select(col("doc_id"), coalesce(size(col("shingles")), lit(0)).as("sz"),
+        explode_outer(col("shingles")).as("sh"))
+    val (a, b) = (e.as("a"), e.as("b"))
+    a.hint("shuffle_hash").join(b, col("a.sh") === col("b.sh") &&
+        col("a.doc_id") < col("b.doc_id") &&
+        col("a.sz") * den >= col("b.sz") * num && col("b.sz") * den >= col("a.sz") * num)
+      .groupBy(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"),
+        col("a.sz").as("sz1"), col("b.sz").as("sz2"))
       .agg(count(lit(1)).as("inter"))
       .withColumn("uni", col("sz1") + col("sz2") - col("inter"))
       .where(col("inter") * den >= col("uni") * num)

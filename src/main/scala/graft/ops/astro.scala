@@ -49,16 +49,20 @@ object Astro {
   private def sqlDec(key: String, m: Int) = s"(($key) * $m % 1700) / 10.0 - 85.0"
 
   /** Cone search: per-row angular distance to a fixed center, keep < 5°.
-    * r19 session 2: the scan is fanned before the trig (guide §2.5) —
-    * the single-row-group fixture file ran the whole 8-transcendental
-    * per-row chain as ONE 0.6 s task; interleaved A/B at local[32]
-    * reads 0.79 → 0.46–0.65 s (min). The fan gate makes a multi-file
-    * production table pass through untouched. */
+    * Not fanned. The r19 spelling fanned the scan (a stock
+    * `repartition` on l_orderkey) to spread the trig, but Catalyst
+    * pushed the cone filter — trig and all — back under the exchange
+    * into the scan tasks, so the trig never ran after the shuffle and
+    * the exchange only moved the surviving rows. With `T.fan` now a
+    * FanOut node that the filter cannot cross, the trig would run on
+    * every core, but the exchange must then ship all 600 k raw rows of
+    * the ×10 lineitem first: at 4 cores that costs more than the trig it
+    * spreads (paired runs, CHANGES.md). The scan's own splits carry it. */
   private def udfAngularDistance(s: SparkSession, dir: String): DataFrame = {
     val ra = raOf(col("l_orderkey") * 37 + col("l_partkey") * 17, 1)
     val dec = decOf(col("l_orderkey") * 53 + col("l_suppkey") * 29, 1)
     val d = angularDist(ra, dec, lit(184.0), lit(12.5))
-    T.fan(T(s, dir, "lineitem"), "l_orderkey")
+    T(s, dir, "lineitem")
       .select(col("l_orderkey"), col("l_linenumber"),
         ra.as("ra"), dec.as("dec"), d.as("dist"))
       .where(col("dist") < ConeDeg)
@@ -117,7 +121,11 @@ object Astro {
       .withColumn("ra_zone_probe", pmod(col("roff") + floor(col("ra_b")), lit(360)))
       .repartition(P, col("zone_probe"), col("ra_zone_probe"))
     val d = angularDist(col("ra_a"), col("dec_a"), col("ra_b"), col("dec_b"))
-    a.join(b, col("zone") === col("zone_probe") &&
+    // shuffled-hash hint: the join consumes both repartitions as they
+    // are (same keys, same P) and hashes one orders partition per task;
+    // AQE would otherwise broadcast a side. Why that partition fits at
+    // ×100: SCALING.md §Joins.
+    a.hint("shuffle_hash").join(b, col("zone") === col("zone_probe") &&
         col("ra_zone") === col("ra_zone_probe"))
       .withColumn("dist", d)
       .where(col("dist") < ZoneEps)

@@ -122,11 +122,30 @@ object T {
     * Never keyed on rand() (retry-duplication hazard, SPARK-38388);
     * results stay exact under any partitioning by the repo's determinism
     * discipline (order-insensitive aggregates; the driver re-runs Verify
-    * at other core counts to pin exactly that). */
+    * at other core counts to pin exactly that).
+    *
+    * The fan is a [[graft.plans.FanOut]] node, not `repartition(n, key)`.
+    * Catalyst's predicate pushdown moves deterministic filters through a
+    * stock repartition, so every filter written after the fan — a
+    * selective predicate over an expensive expression, the
+    * `size(shingles) > 0` filter inferred from an `explode` — was pushed
+    * back under the exchange into the single scan task, taking the
+    * expensive expression with it. FanOut
+    * is opaque to that rule and plans to the same hash exchange
+    * (`FanOutStrategy`, registered here once per session). */
   def fan(df: DataFrame, key: String): DataFrame = {
-    val n = df.sparkSession.sparkContext.defaultParallelism
+    val s = df.sparkSession
+    val n = s.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions >= n) df
-    else df.repartition(n, col(key))
+    else {
+      import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+      import org.apache.spark.sql.graftshim.Shim
+      if (!s.experimental.extraStrategies.contains(graft.plans.FanOutStrategy))
+        s.experimental.extraStrategies =
+          s.experimental.extraStrategies :+ graft.plans.FanOutStrategy
+      Shim.ofRows(s, graft.plans.FanOut(
+        Seq(UnresolvedAttribute.quotedString(key)), n, df.queryExecution.logical))
+    }
   }
 }
 

@@ -1405,11 +1405,9 @@ object Relational {
         max("d").as("d")).select(lit("max").as("tag"), col("k"), col("f"),
         col("d").cast("decimal(18,2)").as("d")))
       .unionByName(s.range(1).select(lit("narrow_files_planned").as("tag"),
-        lit(narrow).as("k"), lit(null).cast("double").as("f"),
-        lit(null).cast("decimal(18,2)").as("d")))
+        lit(narrow).as("k"), lit(0.0).as("f"), lit(0).cast("decimal(18,2)").as("d")))
       .unionByName(s.range(1).select(lit("wide_files_planned").as("tag"),
-        lit(wide).as("k"), lit(null).cast("double").as("f"),
-        lit(null).cast("decimal(18,2)").as("d")))
+        lit(wide).as("k"), lit(0.0).as("f"), lit(0).cast("decimal(18,2)").as("d")))
       .orderBy("tag", "k")
   }
 
@@ -1486,9 +1484,12 @@ object Relational {
     vs.sql("DELETE FROM graftcat.lake.mv_prio_rw WHERE n >= 0")
     materialize()
     val (q3, used3) = ask("q3")
+    // typed non-NULL sentinels in marker rows: the oracle compare
+    // hashes pandas frames, where a NULL DECIMAL is NaN on one side and
+    // None on the other
     def marker(tag: String, v: Long) = vs.range(1).select(
       lit(tag).as("tag"), lit("").as("p"), lit(v).as("n"),
-      lit(null).cast("decimal(18,2)").as("total"))
+      lit(0).cast("decimal(18,2)").as("total"))
     q1.unionByName(q2).unionByName(q3)
       .unionByName(marker("q1_mv_used", used1))
       .unionByName(marker("q2_mv_used", used2))
@@ -3258,9 +3259,9 @@ object Relational {
         |SELECT 'q1' AS tag, p, n, total FROM q1
         |UNION ALL SELECT 'q2', p, n, total FROM q2
         |UNION ALL SELECT 'q3', p, n, total FROM q2
-        |UNION ALL SELECT 'q1_mv_used', '', 1, NULL
-        |UNION ALL SELECT 'q2_mv_used', '', 0, NULL
-        |UNION ALL SELECT 'q3_mv_used', '', 1, NULL
+        |UNION ALL SELECT 'q1_mv_used', '', 1, CAST(0 AS DECIMAL(18,2))
+        |UNION ALL SELECT 'q2_mv_used', '', 0, CAST(0 AS DECIMAL(18,2))
+        |UNION ALL SELECT 'q3_mv_used', '', 1, CAST(0 AS DECIMAL(18,2))
         |ORDER BY tag, p""".stripMargin,
     "catalog_type_widening" ->
       """WITH nar AS (SELECT o_orderkey AS k,
@@ -3276,8 +3277,10 @@ object Relational {
         |  CAST(MIN(d) AS DECIMAL(18,2)) FROM allr
         |UNION ALL SELECT 'max', MAX(k), MAX(f),
         |  CAST(MAX(d) AS DECIMAL(18,2)) FROM allr
-        |UNION ALL SELECT 'narrow_files_planned', 1, NULL, NULL
-        |UNION ALL SELECT 'wide_files_planned', 1, NULL, NULL
+        |UNION ALL SELECT 'narrow_files_planned', 1, CAST(0 AS DOUBLE),
+        |  CAST(0 AS DECIMAL(18,2))
+        |UNION ALL SELECT 'wide_files_planned', 1, CAST(0 AS DOUBLE),
+        |  CAST(0 AS DECIMAL(18,2))
         |ORDER BY tag, k""".stripMargin,
     "catalog_compact_clustered" ->
       """WITH m AS (SELECT (MAX(o_orderkey) // 4) + 1 AS s FROM orders)

@@ -16,6 +16,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectFunction(GraftExtensions.dotFunction)
     ext.injectPlannerStrategy(_ => TopKStrategy)
+    ext.injectPlannerStrategy(_ => FanOutStrategy)
     ext.injectOptimizerRule(_ => WindowTopKRewrite)
     ext.injectOptimizerRule(_ => CountInSetRewrite)
     ext.injectOptimizerRule(_ => VariantShredPrune)

@@ -27,6 +27,29 @@ class PlanSuite extends SparkSuiteBase {
     })
   }
 
+  /** Every node of the FINAL adaptive plan after executing `df`: query
+    * stages are opened, a ReusedExchange stays a leaf. */
+  private def finalNodes(df: org.apache.spark.sql.DataFrame)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    df.queryExecution.executedPlan.execute().foreach(_ => ())
+    def go(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => go(a.executedPlan)
+      case q: QueryStageExec        => go(q.plan)
+      case other                    => other +: other.children.flatMap(go)
+    }
+    go(df.queryExecution.executedPlan)
+  }
+
+  private def byNumExchanges(nodes: Seq[org.apache.spark.sql.execution.SparkPlan]) = {
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
+    nodes.collect { case e: ShuffleExchangeExec if e.shuffleOrigin == REPARTITION_BY_NUM => e }
+  }
+
+  private def mentions(p: org.apache.spark.sql.execution.SparkPlan, fn: String): Boolean =
+    p.expressions.exists(_.toString.contains(fn))
+
   test("scan_parquet_project_filter pushes filters and prunes columns") {
     val p = plan("scan_parquet_project_filter")
     assert(p.contains("PushedFilters:") && p.contains("l_quantity"),
@@ -412,9 +435,78 @@ class PlanSuite extends SparkSuiteBase {
   }
 
   test("llm_dedup_near joins shuffle on the shingle key (no cartesian)") {
-    val p = plan("llm_dedup_near")
-    assert(!p.contains("CartesianProduct"))
-    assert(!p.contains("BroadcastNestedLoopJoin"))
+    import org.apache.spark.sql.execution.{FilterExec, ProjectExec}
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec, ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.joins.ShuffledHashJoinExec
+    val nodes = finalNodes(run("llm_dedup_near"))
+    val shj = nodes.collect { case j: ShuffledHashJoinExec => j }
+    assert(shj.size == 1 && shj.head.leftKeys.map(_.toString).head.startsWith("sh#"),
+      s"expected one shuffled hash join on the shingle:\n${nodes.head}")
+    assert(!nodes.exists(_.isInstanceOf[BroadcastExchangeExec]), "a join side is broadcast")
+    assert(!nodes.exists(n => n.nodeName.contains("Cartesian") ||
+      n.nodeName.contains("NestedLoop")))
+    // the second join side reuses the first side's shingle exchange
+    val reused = nodes.collect { case r: ReusedExchangeExec => r.child }
+    assert(reused.exists {
+      case e: ShuffleExchangeExec => e.outputPartitioning.toString.contains("sh#")
+      case _ => false
+    }, s"no ReusedExchange of the shingle exchange:\n${nodes.head}")
+    // shingling runs once per document: one projection, no filter
+    // re-running it, nothing of it under the fan exchange
+    assert(nodes.count {
+      case p: ProjectExec => mentions(p, "graft_shingles")
+      case _ => false
+    } == 1)
+    assert(!nodes.exists(n => n.isInstanceOf[FilterExec] && mentions(n, "graft_shingles")))
+    val fans = byNumExchanges(nodes)
+    assert(fans.size == 1)
+    assert(fans.head.find(mentions(_, "graft_shingles")).isEmpty)
+  }
+
+  test("T.fan keeps a selective expensive filter above its REPARTITION_BY_NUM exchange") {
+    import org.apache.spark.sql.execution.FilterExec
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.functions.{col, lit}
+    // a cone predicate over the haversine, on a fanned single-file scan
+    val dist = Astro.angularDist(col("l_partkey") % 360, col("l_suppkey") % 170 - 85,
+      lit(184.0), lit(12.5))
+    val nodes = finalNodes(T.fan(T(spark, SF, "lineitem"), "l_orderkey")
+      .where(dist < 5).select("l_orderkey", "l_linenumber"))
+    val fans = byNumExchanges(nodes)
+    assert(fans.size == 1, s"expected one fan exchange:\n${nodes.head}")
+    val below = fans.head.collect { case n => n }
+    assert(!below.exists(mentions(_, "ASIN")), s"trig under the fan exchange:\n${fans.head}")
+    assert(nodes.exists(n => n.isInstanceOf[FilterExec] && mentions(n, "ASIN")),
+      "the cone filter is gone")
+    // column pruning still reaches the scan under the fan
+    val scan = below.collect { case f: FileSourceScanExec => f }
+    assert(scan.size == 1)
+    assert(scan.head.requiredSchema.fieldNames.toSet ==
+      Set("l_orderkey", "l_partkey", "l_suppkey", "l_linenumber"),
+      s"ReadSchema not pruned: ${scan.head.requiredSchema.simpleString}")
+  }
+
+  test("T.fan passes an input with >= n partitions through with no exchange") {
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val n = spark.sparkContext.defaultParallelism
+    val wide = spark.range(0, 1000, 1, n * 2).toDF("id")
+    val fanned = T.fan(wide, "id")
+    assert(fanned eq wide)
+    assert(!finalNodes(fanned.where(org.apache.spark.sql.functions.col("id") % 7 === 0))
+      .exists(_.isInstanceOf[ShuffleExchangeExec]))
+  }
+
+  test("astro_crossmatch_zones joins on its two repartitions: no broadcast, no extra exchange") {
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.joins.ShuffledHashJoinExec
+    val nodes = finalNodes(run("astro_crossmatch_zones"))
+    assert(!nodes.exists(_.isInstanceOf[BroadcastExchangeExec]), s"broadcast:\n${nodes.head}")
+    assert(nodes.count(_.isInstanceOf[ShuffledHashJoinExec]) == 1)
+    // the two repartitions and the final orderBy's range exchange, nothing else
+    val exchanges = nodes.collect { case e: ShuffleExchangeExec => e.outputPartitioning.toString }
+    assert(byNumExchanges(nodes).size == 2 && exchanges.size == 3 &&
+      exchanges.count(_.startsWith("rangepartitioning")) == 1,
+      s"an exchange above the repartitions:\n${nodes.head}")
   }
 
   test("llm_corpus_filter plans one window pass, no self-join") {

@@ -15,8 +15,15 @@ hash. Outputs containing complex-typed values (lists/structs/maps) are
 REJECTED up front: the driver's comparator crashes on them
 (`TypeError: unhashable type: 'numpy.ndarray'`, see round-10
 fn_regexp), so local green must never be claimed for such an output.
+Both sides are read as pandas frames, the form the reference compare
+hashes: DuckDB's `.df()` for the oracle, `pd.read_parquet` for the
+engine's output. A cell the two conversions represent differently fails
+here as it does there: a NULL DECIMAL is float NaN from `.df()` but
+`None` from `read_parquet`.
 Dev tool only; not part of the shipped library.
 """
+import datetime
+import decimal
 import json
 import os
 import math
@@ -24,19 +31,46 @@ import struct
 import sys
 
 import duckdb
+import numpy as np
+import pandas as pd
 
 TABLES = ["region", "nation", "customer", "supplier", "part",
           "orders", "lineitem", "events", "documents", "embeddings"]
 
 
 def canon(v):
-    if isinstance(v, float):
+    """One pandas cell as a comparable string. The kind of a missing
+    value is kept: float NaN, None and NaT stay distinct, because the
+    hashed frames keep them distinct. A non-null DECIMAL is a float
+    in `.df()` and a decimal.Decimal from `read_parquet`; both compare
+    by their double value."""
+    if v is None:
+        return "None"
+    if v is pd.NaT:
+        return "NaT"
+    if isinstance(v, decimal.Decimal):
+        v = float(v)
+    if isinstance(v, (bool, np.bool_)):
+        return repr(bool(v))
+    if isinstance(v, (float, np.floating)):
         if math.isnan(v):
             return "NaN"
-        return struct.pack(">d", v).hex()
-    if isinstance(v, int):
-        return str(v)
+        return struct.pack(">d", float(v)).hex()
+    if isinstance(v, (int, np.integer)):
+        return str(int(v))
+    # a DATE is datetime.date from read_parquet, a midnight Timestamp
+    # from .df(); compare both as timestamps
+    if isinstance(v, (pd.Timestamp, datetime.date)):
+        t = pd.Timestamp(v)
+        if t.tzinfo is not None:
+            t = t.tz_convert("UTC").tz_localize(None)
+        return t.isoformat()
     return repr(v)
+
+
+def frame(df):
+    """(column names, row tuples) of a pandas frame."""
+    return list(df.columns), list(df.itertuples(index=False, name=None))
 
 
 def main(sf_dir, out_dir, only=None):
@@ -71,10 +105,7 @@ def main(sf_dir, out_dir, only=None):
     n_pass = n_fail = 0
     for name in produced:
         try:
-            mine = con.execute(
-                f"SELECT * FROM read_parquet('{out_dir}/{name}/*.parquet')")
-            my_cols = [d[0] for d in mine.description]
-            my_rows = mine.fetchall()
+            my_cols, my_rows = frame(pd.read_parquet(f"{out_dir}/{name}"))
         except Exception as e:
             print(f"FAIL {name}: cannot read own output: {e}")
             n_fail += 1
@@ -87,9 +118,7 @@ def main(sf_dir, out_dir, only=None):
             n_fail += (not ok)
             continue
         try:
-            ref = con.execute(oracle[name])
-            ref_cols = [d[0] for d in ref.description]
-            ref_rows = ref.fetchall()
+            ref_cols, ref_rows = frame(con.execute(oracle[name]).df())
         except Exception as e:
             print(f"FAIL {name}: oracle SQL error: {e}")
             n_fail += 1
@@ -110,7 +139,7 @@ def main(sf_dir, out_dir, only=None):
         # here so local green predicts driver green
         complex_cell = next(
             (my_cols[i] for r in my_rows[:100] for i in range(len(r))
-             if isinstance(r[i], (list, tuple, dict))), None)
+             if isinstance(r[i], (list, tuple, dict, np.ndarray))), None)
         if complex_cell:
             print(f"FAIL {name}: complex-typed column '{complex_cell}' — "
                   "driver comparator crashes on array/struct/map values "
